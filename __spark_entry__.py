@@ -114,7 +114,10 @@ _DEFER_FIRST: tuple[str, ...] = ()
 # join-backs) — every lowered/measure-bearing MR/CEP entry re-verifies
 # first — plus the PPJoin prefix stage (dedup.py), the staged MAD plan
 # (stats.py), and the PQ-ANN temp-view cleanup (similarity.py).
+# x_semdedup leads: its block-decomposed pair join has no recorded
+# green CORRECTNESS row yet.
 _REVERIFY_FIRST: tuple[str, ...] = (
+    "x_semdedup",
     "x_mr_agg", "x_mr_subset", "x_mr_multikey", "x_mr_composed",
     "x_mr_plus", "x_mr_offsets", "x_mr_next", "x_mr_optional",
     "x_mr_xvar", "x_mr_allrows", "x_mr_prev", "x_mr_skip_to_last",

@@ -549,8 +549,7 @@ class KeyedStream:
         gets ``(key_tuple, frames_iterator, GroupState)`` per trigger
         and yields output frames — Spark's ``applyInPandasWithState``
         under Flink's name (the same backend every keyed-state operator
-        in ``streaming/`` runs on; ``transformWithState`` needs
-        protobuf, absent in this sandbox).  Bounded inputs: use
+        in ``streaming/`` runs on).  Bounded inputs: use
         ``process`` — state across a single bounded pass is the fold
         itself."""
         from pyspark.sql.streaming.state import GroupStateTimeout

@@ -162,10 +162,16 @@ def _parse_pattern(pattern: str) -> list[tuple]:
 _MEASURE_RE = re.compile(
     r"^(?:(?P<sem>RUNNING|FINAL)\s+)?"
     r"(?:(?P<fn>FIRST|LAST|COUNT|SUM|AVG|MIN|MAX)\s*\(\s*)?"
-    r"(?P<var>\w+)\.(?P<col>\w+|\*)(?:\s*,\s*(?P<off>\d+))?\s*\)?"
+    r"(?P<var>\w+)\.(?P<col>\w+|\*|`(?:[^`]|``)+`)"
+    r"(?:\s*,\s*(?P<off>\d+))?\s*\)?"
     r"\s+AS\s+(?P<alias>\w+)$",
     re.IGNORECASE,
 )
+
+
+def _col_ref(name: str):
+    """Column by exact name (spaces, dots, backticks and all)."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _split_top(text: str) -> list[str]:
@@ -177,7 +183,7 @@ def _split_top(text: str) -> list[str]:
             if ch == q:
                 q = None
             continue
-        if ch in "'\"":
+        if ch in "'\"`":
             q = ch
         elif ch == "(":
             depth += 1
@@ -881,7 +887,7 @@ def match_recognize(
 
     # measures (the match frame's key column keeps its source name/type)
     cols = [F.col(key)]
-    joinbacks: list[tuple[str, str]] = []  # (tmp id col, measure alias->source col)
+    joinbacks: list[tuple[str, str, str]] = []  # (tmp id col, measure alias, source col)
     # (fn, var-or-SUBSET-members, col, alias)
     aggbacks: list[tuple[str, object, str, str]] = []
     runbacks: list[tuple[str, object, str, str]] = []  # RUNNING measures
@@ -920,6 +926,8 @@ def match_recognize(
         fn = (mm.group("fn") or "LAST").upper()
         sem = (mm.group("sem") or "FINAL").upper()
         var, col, alias = mm.group("var"), mm.group("col"), mm.group("alias")
+        if col.startswith("`"):
+            col = col[1:-1].replace("``", "`")
         off = int(mm.group("off") or 0)
         if var not in variables and var not in subsets:
             raise ValueError(f"measure references unknown variable {var}")
@@ -996,7 +1004,7 @@ def match_recognize(
             else:
                 idexpr = nfa.first_id(var) if fn == "FIRST" else nfa.last_id(var)
             cols.append(idexpr.alias(tmp))
-            joinbacks.append((tmp, f"{alias}:{col}"))
+            joinbacks.append((tmp, alias, col))
 
     if events.isStreaming and joinbacks:
         raise ValueError(
@@ -1054,10 +1062,9 @@ def match_recognize(
             out = out.localCheckpoint(eager=False)
             cols.append(F.col("_mid"))
         res = out.select(*cols)
-    for tmp, spec in joinbacks:
-        alias, col = spec.split(":")
+    for tmp, alias, col in joinbacks:
         side = events.select(
-            F.col("event_id").alias(f"{tmp}_k"), F.col(col).alias(alias)
+            F.col("event_id").alias(f"{tmp}_k"), _col_ref(col).alias(alias)
         )
         res = res.join(side, res[tmp] == side[f"{tmp}_k"], "left").drop(tmp, f"{tmp}_k")
     if aggbacks:
@@ -1079,30 +1086,25 @@ def match_recognize(
         )
         need = sorted({col for _, _, col, _ in aggbacks})
         vals = events.select(
-            F.col("event_id").alias("_eid"), *[F.col(c) for c in need]
+            F.col("event_id").alias("_eid"), *[_col_ref(c) for c in need]
         )
         agg_exprs = []
         for fn, var, col, alias in aggbacks:
-            pred = (
-                "_lbl IN (" + ", ".join(f"'{m}'" for m in var) + ")"
-                if isinstance(var, tuple)
-                else f"_lbl = '{var}'"
-            )
-            v = f"(CASE WHEN {pred} THEN `{col}` END)"
+            members = var if isinstance(var, tuple) else (var,)
+            v = F.when(F.col("_lbl").isin(*members), _col_ref(col))
             # SUM/AVG accumulate in DECIMAL(28,10): double accumulation
             # is shuffle-order-dependent (non-associative), so the same
             # query could hash differently run to run; exact decimal
             # sums are order-free and cross-engine identical, cast back
             # to double once.  (1e-10 quantization of genuinely
             # irrational inputs is the documented price.)
-            if fn == "sum":
-                expr = f"cast(sum(cast({v} as decimal(28,10))) as double)"
-            elif fn == "avg":
-                expr = (f"cast(sum(cast({v} as decimal(28,10))) as double)"
-                        f" / count({v})")
+            if fn in ("sum", "avg"):
+                m = F.sum(v.cast("decimal(28,10)")).cast("double")
+                if fn == "avg":
+                    m = m / F.count(v)
             else:
-                expr = f"{fn}({v})"
-            agg_exprs.append(F.expr(expr).alias(alias))
+                m = getattr(F, fn)(v)
+            agg_exprs.append(m.alias(alias))
         agg = pairs.join(vals, "_eid").groupBy("_mid").agg(*agg_exprs)
         res = res.join(agg, "_mid", "left").drop("_mid")
     if len(keys) > 1:

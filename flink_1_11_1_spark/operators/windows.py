@@ -112,7 +112,8 @@ def count_tumble(
     adds ``count_window`` = 0-based window index within the key.
 
     Batch formulation: row_number over a deterministic per-key order.
-    (Streaming equivalent lives in streaming/cep.py's keyed-state tier.)
+    (A streaming count window needs keyed state:
+    ``KeyedStream.process_with_state``.)
     """
     w = Window.partitionBy(*keys).orderBy(*order)
     return df.withColumn(

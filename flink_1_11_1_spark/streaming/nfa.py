@@ -1,5 +1,5 @@
 """General CEP NFA: quantifiers, contiguity, horizon, AFTER MATCH SKIP
-(SURVEY.md §3.11 — the breadth tier above cep.py's two-state CEP-lite).
+(SURVEY.md §3.11 — the one CEP engine, batch and streaming).
 
 Reference parity: flink-libraries/flink-cep pattern/Pattern.java
 (``times``/``timesOrMore``/``oneOrMore``/``optional``/``next``/

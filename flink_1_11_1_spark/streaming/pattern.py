@@ -1,24 +1,10 @@
-"""Fluent CEP Pattern API (flink-cep pattern/Pattern.java parity).
-
-``Pattern.begin(cond).followed_by(cond).within("1 hour")`` compiles to
-the cep engine — ``followed_by`` is Flink's relaxed contiguity (other
-events may occur between A and B), which is what the cep NFA implements.
-Conditions are SQL boolean expressions over the event columns,
-evaluated JVM-side (Flink's IterativeCondition, pre-evaluated).
-
-Scope (CEP-lite): two states + within.  ``next()`` (strict contiguity),
-quantifiers and AFTER MATCH SKIP variants are documented non-goals of
-this round.
-"""
+"""Interval parsing shared by the streaming operators (``within``,
+watermark delays, state TTLs, join bounds): ``"30 minutes"``,
+``"1 hour"`` or a plain number of seconds."""
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-
-from . import cep
 
 _UNITS = {
     "second": 1,
@@ -41,54 +27,3 @@ def _parse_interval(text: str | int) -> int:
             f"unsupported interval {text!r}; use e.g. '30 minutes', '1 hour'"
         )
     return int(m.group(1)) * _UNITS[m.group(2).lower()]
-
-
-@dataclass(frozen=True)
-class Pattern:
-    a_cond: str
-    b_cond: str | None = None
-    horizon_s: int = 3600
-    strict: bool = False
-
-    @staticmethod
-    def begin(cond: str) -> Pattern:
-        return Pattern(a_cond=cond)
-
-    def followed_by(self, cond: str) -> Pattern:
-        """Relaxed contiguity: other events may occur between A and B."""
-        if self.b_cond is not None:
-            raise ValueError("CEP-lite supports exactly two states (A, B)")
-        return Pattern(self.a_cond, cond, self.horizon_s, False)
-
-    def next_(self, cond: str) -> Pattern:
-        """Strict contiguity (Flink Pattern.next): B must be the
-        immediately-following event of the key."""
-        if self.b_cond is not None:
-            raise ValueError("CEP-lite supports exactly two states (A, B)")
-        return Pattern(self.a_cond, cond, self.horizon_s, True)
-
-    def within(self, interval: str | int) -> Pattern:
-        return Pattern(self.a_cond, self.b_cond, _parse_interval(interval), self.strict)
-
-    def _check(self) -> None:
-        if self.b_cond is None:
-            raise ValueError("pattern needs .followed_by/.next_(condition)")
-
-    def match_stream(self, events: DataFrame) -> DataFrame:
-        self._check()
-        return cep.match_stream(
-            events, self.horizon_s, self.a_cond, self.b_cond, self.strict
-        )
-
-    def match_batch(self, events: DataFrame) -> DataFrame:
-        self._check()
-        return cep.match_batch(
-            events, self.horizon_s, self.a_cond, self.b_cond, self.strict
-        )
-
-
-def one_or_more_match_batch(
-    events: DataFrame, a_cond: str, b_cond: str, within: str | int
-) -> DataFrame:
-    """Fluent-adjacent helper for the oneOrMore quantifier (greedy A+)."""
-    return cep.match_one_or_more(events, _parse_interval(within), a_cond, b_cond)

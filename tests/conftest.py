@@ -26,10 +26,22 @@ def pytest_collection_modifyitems(config, items):
         return
     if config.option.markexpr or config.option.keyword:
         return  # explicit selection wins, including -m "slow"
-    deselected = [it for it in items if it.get_closest_marker("slow")]
+    # a test file or node id named on the command line is an explicit
+    # selection too: its slow tests run (a named directory is not)
+    root = config.invocation_params.dir
+    named = set()
+    for arg in config.args:
+        path = os.path.join(root, arg.split("::")[0])
+        if "::" in arg or os.path.isfile(path):
+            named.add(os.path.abspath(path))
+
+    def deselect(item) -> bool:
+        return bool(item.get_closest_marker("slow")) and str(item.path) not in named
+
+    deselected = [it for it in items if deselect(it)]
     if deselected:
         config.hook.pytest_deselected(items=deselected)
-        items[:] = [it for it in items if not it.get_closest_marker("slow")]
+        items[:] = [it for it in items if not deselect(it)]
 
 
 @pytest.fixture(scope="session")

@@ -19,7 +19,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from flink_1_11_1_spark.streaming import cep, over, replay, semi_anti, temporal
+from flink_1_11_1_spark.streaming import over, replay, semi_anti, temporal
+from flink_1_11_1_spark.streaming.nfa import PatternSeq
 
 pytestmark = pytest.mark.slow  # heavy battery: -m 'not slow' skips it
 
@@ -190,15 +191,20 @@ def test_cep_match_restart_parity(spark, tmp_path):
         _frame(spark, [(9, 9, 500, None, "signup")]),  # wm sentinel
     ]
 
+    pat = (
+        PatternSeq.begin("a", "event_type = 'signup'")
+        .followed_by("b", "event_type = 'purchase'")
+        .within("1 hour")
+    )
+
     def build(stream):
-        return cep.match_stream(
-            stream.select("user_id", "event_id", "event_type", "ts"),
-            horizon_s=3600,
+        return pat.match_stream(
+            stream.select("user_id", "event_id", "event_type", "ts")
         )
 
     want, partial, got = _restart_parity(
-        spark, tmp_path, "cep", frames, 2, build, ["user_id", "a_id", "b_id"]
+        spark, tmp_path, "cep", frames, 2, build, ["user_id", "ids"]
     )
     assert got == want
     assert len(partial) < len(want)
-    assert [(r[0], r[1], r[2]) for r in want] == [(1, 1, 3)]
+    assert [(u, ids[0], ids[1]) for u, ids in want] == [(1, 1, 3)]

@@ -361,6 +361,16 @@ def test_aggregate_measures_hand_computed(spark):
     r = rows[0]
     assert (r.s, r.m, r.lo, r.hi, r.c_id) == (6.5, 3.25, 2.5, 4.0, 4)
 
+    # a measure column that only a quoted identifier can name: the
+    # aggregates and the LAST join-back resolve it by exact name
+    quoted = sql.replace(
+        "LAST(C.event_id) AS c_id",
+        "LAST(B.`unit price, in ``$``.`) AS last_b",
+    ).replace("B.value)", "B.`unit price, in ``$``.`)")
+    odd = ev.withColumnRenamed("value", "unit price, in `$`.")
+    r = match_recognize(spark, quoted, events=odd).collect()[0]
+    assert (r.s, r.m, r.lo, r.hi, r.last_b) == (6.5, 3.25, 2.5, 4.0, 4.0)
+
 
 def test_aggregate_measures_streaming_rejected(spark, tmp_path):
     sql = """

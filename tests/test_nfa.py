@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from flink_1_11_1_spark import catalog
 from flink_1_11_1_spark.streaming import nfa, replay
 
+from . import pattern_oracle
 from .conftest import SF_SMOKE
 
 
@@ -165,25 +166,25 @@ def test_final_state_quantifier_contract():
          .with_backtracking()._check())
 
 
-def test_nfa_equals_cep_lite_on_fixture(spark):
-    """The general NFA restricted to A followedBy B within t must equal
-    cep.match_batch (the proven CEP-lite operator) on real events."""
-    from flink_1_11_1_spark.streaming import cep
-
+def test_nfa_equals_oracle_on_fixture(spark, duck):
+    """A followedBy B within t on real events: the native lowering and
+    the keyed fold both equal the DuckDB oracle."""
     ev = catalog.load_table(spark, SF_SMOKE, "events")
-    lite = {
-        (r.user_id, r.a_id, r.b_id)
-        for r in cep.match_batch(ev, horizon_s=3600).collect()
-    }
     pat = (
-        nfa.PatternSeq.begin("a", cep.A_COND)
-        .followed_by("b", cep.B_COND)
+        nfa.PatternSeq.begin("a", "event_type = 'signup'")
+        .followed_by("b", "event_type = 'purchase'")
         .within("1 hour")
     )
-    got = {
-        (r.user_id, r.ids[0], r.ids[1]) for r in pat.match_batch(ev).collect()
-    }
-    assert got == lite
+    want = pattern_oracle.pattern_pairs(
+        duck, "event_type = 'signup'", "event_type = 'purchase'", 3600
+    )
+    assert want  # non-vacuous
+    for lowering in (True, False):
+        got = {
+            (r.user_id, r.ids[0], r.ids[1])
+            for r in pat.match_batch(ev, lowering=lowering).collect()
+        }
+        assert got == want, f"lowering={lowering}"
 
 
 def test_iterative_condition_batch(spark):

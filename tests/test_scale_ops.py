@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from flink_1_11_1_spark import catalog
 from flink_1_11_1_spark.operators import skew
-from flink_1_11_1_spark.streaming import cep
-from flink_1_11_1_spark.streaming.pattern import Pattern
+from flink_1_11_1_spark.streaming.nfa import PatternSeq
 
+from . import pattern_oracle
 from .conftest import SF_SMOKE
 
 
@@ -210,56 +210,60 @@ def test_bucketed_join_has_no_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS t_bucket_lineitem")
 
 
-def test_pattern_api_compiles_to_cep(spark):
+def _pairs(matches) -> set[tuple[int, int, int]]:
+    return {(r.user_id, r.ids[0], r.ids[1]) for r in matches.collect()}
+
+
+def test_pattern_api_compiles_to_cep(spark, duck):
     ev = catalog.load_table(spark, SF_SMOKE, "events")
     fluent = (
-        Pattern.begin("event_type = 'signup'")
-        .followed_by("event_type = 'purchase'")
+        PatternSeq.begin("a", "event_type = 'view'")
+        .followed_by("b", "event_type = 'click'")
         .within("1 hour")
         .match_batch(ev)
     )
-    direct = cep.match_batch(ev, horizon_s=3600)
-    assert sorted(map(tuple, fluent.collect())) == sorted(map(tuple, direct.collect()))
+    want = pattern_oracle.pattern_pairs(
+        duck, "event_type = 'view'", "event_type = 'click'", 3600
+    )
+    assert want and _pairs(fluent) == want
 
 
-def test_pattern_custom_conditions(spark):
+def test_pattern_custom_conditions(spark, duck):
     ev = catalog.load_table(spark, SF_SMOKE, "events")
     m = (
-        Pattern.begin("event_type = 'click'")
-        .followed_by("event_type = 'error'")
+        PatternSeq.begin("a", "event_type = 'click'")
+        .followed_by("b", "event_type = 'error'")
         .within("30 minutes")
         .match_batch(ev)
     )
     rows = m.collect()
     clicks = {r.event_id for r in ev.where("event_type = 'click'").collect()}
     errors = {r.event_id for r in ev.where("event_type = 'error'").collect()}
-    assert all(r.a_id in clicks and r.b_id in errors for r in rows)
-    assert all((r.b_ts - r.a_ts).total_seconds() <= 1800 for r in rows)
+    assert all(r.ids[0] in clicks and r.ids[1] in errors for r in rows)
+    assert all((r.end_ts - r.start_ts).total_seconds() <= 1800 for r in rows)
     assert len(rows) > 0
+    assert {(r.user_id, r.ids[0], r.ids[1]) for r in rows} == (
+        pattern_oracle.pattern_pairs(
+            duck, "event_type = 'click'", "event_type = 'error'", 1800
+        )
+    )
 
 
 def test_pattern_api_validation():
-    with pytest.raises(ValueError, match="followed_by"):
-        Pattern.begin("x = 1").match_batch(None)
-    with pytest.raises(ValueError, match="two states"):
-        Pattern.begin("a").followed_by("b").followed_by("c")
     with pytest.raises(ValueError, match="unsupported interval"):
-        Pattern.begin("a").followed_by("b").within("soon")
+        PatternSeq.begin("a", "x = 1").followed_by("b", "y = 1").within("soon")
 
 
-def test_pattern_next_strict_contiguity(spark):
-    """next() matches only immediately-adjacent A,B per key."""
-    from flink_1_11_1_spark.streaming import cep
-
+def test_pattern_next_strict_contiguity(spark, duck):
+    """next_() matches only immediately-adjacent A,B per key."""
     ev = catalog.load_table(spark, SF_SMOKE, "events")
-    strict = cep.match_batch(
-        ev, 3600, "event_type = 'view'", "event_type = 'click'", strict=True
+    view = PatternSeq.begin("a", "event_type = 'view'")
+    s_rows = _pairs(
+        view.next_("b", "event_type = 'click'").within("1 hour").match_batch(ev)
     )
-    relaxed = cep.match_batch(
-        ev, 3600, "event_type = 'view'", "event_type = 'click'", strict=False
+    r_rows = _pairs(
+        view.followed_by("b", "event_type = 'click'").within("1 hour").match_batch(ev)
     )
-    s_rows = {(r.user_id, r.a_id, r.b_id) for r in strict.collect()}
-    r_rows = {(r.user_id, r.a_id, r.b_id) for r in relaxed.collect()}
     assert s_rows  # non-vacuous
     assert s_rows <= r_rows  # strict is a subset of relaxed
     # every strict match is truly adjacent: no event between a_id and b_id
@@ -270,33 +274,32 @@ def test_pattern_next_strict_contiguity(spark):
     for u, a, b in s_rows:
         seq = by_user[u]
         assert seq.index(b) == seq.index(a) + 1
+    assert s_rows == pattern_oracle.pattern_pairs(
+        duck, "event_type = 'view'", "event_type = 'click'", 3600, strict=True
+    )
 
 
 def test_pattern_next_stream_equals_batch(spark):
     import tempfile
 
-    from flink_1_11_1_spark.streaming import cep, replay
+    from flink_1_11_1_spark.streaming import replay
 
+    pat = (
+        PatternSeq.begin("a", "event_type = 'view'")
+        .next_("b", "event_type = 'click'")
+        .within("1 hour")
+    )
     d = tempfile.mkdtemp(prefix="strict_replay_")
     try:
         replay.write_replay(spark, SF_SMOKE, d, parts=4)
         stream = replay.events_stream(spark, d).select(
             "user_id", "event_id", "event_type", "ts"
         )
-        got, _ = replay.run_stream(
-            cep.match_stream(
-                stream, 3600, "event_type = 'view'", "event_type = 'click'", strict=True
-            ),
-            "append",
-            "strict_cep",
-        )
-        want = cep.match_batch(
-            catalog.load_table(spark, SF_SMOKE, "events"),
-            3600, "event_type = 'view'", "event_type = 'click'", strict=True,
-        ).collect()
+        got, _ = replay.run_stream(pat.match_stream(stream), "append", "strict_cep")
+        want = _pairs(pat.match_batch(catalog.load_table(spark, SF_SMOKE, "events")))
         # the flush sentinel (user -1) breaks no real key's contiguity
-        got_s = {(r.user_id, r.a_id, r.b_id) for r in got if r.user_id >= 0}
-        assert got_s == {(r.user_id, r.a_id, r.b_id) for r in want}
+        got_s = {(r.user_id, r.ids[0], r.ids[1]) for r in got if r.user_id >= 0}
+        assert want and got_s == want
     finally:
         import shutil
 
@@ -360,25 +363,6 @@ def test_connected_streams_threshold_filter(spark):
 
         shutil.rmtree(d1, ignore_errors=True)
         shutil.rmtree(d2, ignore_errors=True)
-
-
-def test_one_or_more_quantifier(spark):
-    """Greedy A+ followedBy B: every B's A-set = the pairs sharing it,
-    and n_a sums to the total pair count."""
-    from flink_1_11_1_spark.streaming import cep
-
-    ev = catalog.load_table(spark, SF_SMOKE, "events")
-    pairs = cep.match_batch(ev, 3600, "event_type = 'view'", "event_type = 'click'")
-    grouped = cep.match_one_or_more(
-        ev, 3600, "event_type = 'view'", "event_type = 'click'"
-    )
-    g = {(r.user_id, r.b_id): (r.n_a, r.first_a, r.last_a) for r in grouped.collect()}
-    p = pairs.collect()
-    assert sum(n for n, _, _ in g.values()) == len(p)
-    for (u, b), (n, fa, la) in g.items():
-        mine = sorted(r.a_id for r in p if r.user_id == u and r.b_id == b)
-        assert len(mine) == n and mine[0] == fa and mine[-1] == la
-    assert len(g) > 0
 
 
 def test_connected_streams_same_ts_control_applies(spark, tmp_path):
